@@ -132,6 +132,9 @@ object Functions {
   def hashSampleMod(shingleArr: Column, mod: Int): Column =
     ColumnBridge.column(HashSampleMod(ColumnBridge.expression(shingleArr), mod))
 
+  def minhashSignature(shingleArr: Column, numHashes: Int): Column =
+    ColumnBridge.column(MinhashSignature(ColumnBridge.expression(shingleArr), numHashes))
+
   /** Runtime registration (works on any existing session). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -5,10 +5,12 @@ import java.security.MessageDigest
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.ops.Dedup
 
 /** Shared 60-bit portable hash: md5 of the UTF-8 bytes, first 15 hex chars
   * as a long — bit-identical to [[graft.ops.Dedup.portableHash]]'s Column
@@ -174,5 +176,78 @@ object HashSampleMod {
       i += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(out, outLen))
+  }
+}
+
+/** Native Catalyst expression: the MinHash signature of a shingle array —
+  * for k in [0, numHashes) the minimum over non-null shingles of
+  * `(h30·a_k + b_k) mod P`, where h30 is the portable 60-bit hash folded to
+  * 30 bits and (a_k, b_k) is the affine family of [[graft.ops.Dedup.permA]]
+  * / [[graft.ops.Dedup.permB]] over P = 2^31 − 1. One pass per document:
+  * each shingle is hashed once and folded into all `numHashes` running
+  * minima.
+  *
+  * Exists because the composed form (`explode` the shingles, hash each row
+  * through the md5 → hex → substring → `conv` string chain, then a
+  * `numHashes`-column `min` aggregate keyed by doc_id) turns bounded
+  * per-document metadata into a row per shingle plus a hash aggregate and
+  * a doc_id shuffle — the [[WinnowKeys]] story again, same fix.
+  *
+  * Bit-identical to that composition (pinned in Round10Spec): an array
+  * with no non-null element (a null document shingles to `[null]`) yields
+  * `numHashes` nulls, as `min` over null rows does; a null array yields
+  * null. Rows map one to one: merging duplicate keys is the caller's
+  * concern ([[graft.ops.Dedup.minhashSignatures]]).
+  */
+case class MinhashSignature(child: Expression, numHashes: Int) extends UnaryExpression {
+  require(numHashes >= 1 && numHashes <= Dedup.NumHashes,
+    s"minhash signature width must be in [1, ${Dedup.NumHashes}], got $numHashes")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"minhash_signature requires array<string>, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "minhash_signature"
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinhashSignature.compute(input.asInstanceOf[ArrayData], numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.MinhashSignature.compute($c, $numHashes);")
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
+    copy(child = newChild)
+}
+
+object MinhashSignature {
+  private val A: Array[Long] = Array.tabulate(Dedup.NumHashes)(Dedup.permA)
+  private val B: Array[Long] = Array.tabulate(Dedup.NumHashes)(Dedup.permB)
+
+  /** Called from both interpreted eval and generated code. h30 < 2^30 and
+    * a_k, b_k < 2^31, so `h30·a_k + b_k` < 2^62 never overflows. */
+  def compute(arr: ArrayData, numHashes: Int): ArrayData = {
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    var any = false
+    val n = arr.numElements()
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i)) {
+        any = true
+        val h30 = PortableHash60.hash(arr.getUTF8String(i)) % 1073741824L
+        var k = 0
+        while (k < numHashes) {
+          val v = (h30 * A(k) + B(k)) % Dedup.P
+          if (v < mins(k)) mins(k) = v
+          k += 1
+        }
+      }
+      i += 1
+    }
+    if (any) UnsafeArrayData.fromPrimitiveArray(mins)
+    else new GenericArrayData(new Array[Any](numHashes))
   }
 }

@@ -44,22 +44,29 @@ object Dedup {
     "CASE WHEN len(toks) >= 3 THEN list_transform(range(0, len(toks) - 2), " +
       "i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3])) ELSE [text] END"
 
-  /** doc_id → 64 minhashes. The shingle string is hashed ONCE (portable
-    * md5-prefix hash, folded to 30 bits); the 64 per-permutation values are
-    * affine rehashes `(a_k*h30 + b_k) mod p` in sub-overflow modular
-    * arithmetic (a_k < 2^31 × h30 < 2^30 < 2^62 — ANSI-safe, unlike a
-    * 64-bit-input affine family; see [[permA]] for why the multipliers
-    * must span the full range). At 100 TB this is the difference between 64
-    * variable-length string hashes per shingle and one, and because every
-    * step is engine-portable the ENTIRE pipeline (pairs, clusters) is
-    * DuckDB-oracle-checked. One explode + one groupBy: the shuffle carries
-    * (doc_id, 64 partial mins) pre-combined map-side, NOT raw shingles. */
-  def minhashSignatures(docs: DataFrame): DataFrame = {
-    val exploded = docs
-      .select(col("doc_id"), explode(shingles(col("text"))).as("sh"))
-      .select(col("doc_id"), (portableHash(col("sh")) % lit(1073741824L)).as("h30"))
-    val mins = (0 until NumHashes).map(k => min(perm(k, col("h30"))).as(s"h$k"))
-    exploded.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  /** doc_id → 64 minhashes (`h0`..`h63`). The shingle string is hashed
+    * ONCE (portable md5-prefix hash, folded to 30 bits); the 64
+    * per-permutation values are affine rehashes `(a_k*h30 + b_k) mod p` in
+    * sub-overflow modular arithmetic (a_k < 2^31 × h30 < 2^30 < 2^62 —
+    * ANSI-safe, unlike a 64-bit-input affine family; see [[permA]] for why
+    * the multipliers must span the full range). Because every step is
+    * engine-portable the ENTIRE pipeline (pairs, clusters) is
+    * DuckDB-oracle-checked.
+    *
+    * One per-row map: the native [[graft.functions.MinhashSignature]] folds
+    * a document's shingles into its 64 minima in a single pass, so the
+    * signature stage has no explode, no aggregate and no exchange.
+    * PRECONDITION: `docs` is keyed by doc_id (one row per id) — each input
+    * row yields one signature row, so duplicate ids are not merged. */
+  def minhashSignatures(docs: DataFrame): DataFrame = signatures(docs, NumHashes)
+
+  /** The first `numHashes` permutations of the family as columns
+    * `h0`..`h{numHashes-1}`, one row per document (see
+    * [[minhashSignatures]] for the precondition). */
+  private def signatures(docs: DataFrame, numHashes: Int): DataFrame = {
+    val sig = graft.functions.Functions.minhashSignature(shingles(col("text")), numHashes)
+    docs.select(col("doc_id"), sig.as("sig"))
+      .select(col("doc_id") +: (0 until numHashes).map(k => col("sig").getItem(k).as(s"h$k")): _*)
   }
 
   /** (doc_id, band, sig): band signature = that band's minhash rows joined
@@ -149,10 +156,11 @@ object Dedup {
   /** Oracle-checked minhash witness: the first 16 permutations of the same
     * portable-hash affine family [[minhashSignatures]] uses (sub-overflow
     * modular arithmetic — ANSI-safe: h folded to 30 bits, [[permA]]),
-    * emitted as raw signature columns so the DuckDB compare sees the
-    * per-permutation values directly. */
+    * computed by the same native kernel at width 16 and emitted as raw
+    * signature columns so the DuckDB compare sees the per-permutation
+    * values directly. */
   val MinhashSigPerms = 16
-  private val P = 2147483647L // 2^31 - 1
+  private[graft] final val P = 2147483647L // 2^31 - 1
 
   /** Full-range affine permutation family over the prime P — a_k spreads
     * across [1, P) so the 64 permutations rank shingles ~independently.
@@ -170,19 +178,12 @@ object Dedup {
     * oracle-checked end-to-end. */
   private[graft] def permA(k: Int): Long = (2654435761L * (k + 1)) % P
   private[graft] def permB(k: Int): Long = (2971215073L * (k + 1)) % P
-  private def perm(k: Int, h30: Column): Column =
-    pmod(h30 * lit(permA(k)) + lit(permB(k)), lit(P))
   /** The family's DuckDB spelling (operands positive, so `%` ≡ pmod). */
   private def permSql(k: Int): String =
     s"min((h30 * ${permA(k)} + ${permB(k)}) % $P) AS h$k"
 
-  val minhashSig: Q = (s, d) => {
-    val exploded = Tables(s, d, "documents")
-      .select(col("doc_id"), explode(shingles(col("text"))).as("sh"))
-      .select(col("doc_id"), (portableHash(col("sh")) % lit(1073741824L)).as("h30"))
-    val mins = (0 until MinhashSigPerms).map(k => min(perm(k, col("h30"))).as(s"h$k"))
-    exploded.groupBy("doc_id").agg(mins.head, mins.tail: _*).orderBy("doc_id")
-  }
+  val minhashSig: Q = (s, d) =>
+    signatures(Tables(s, d, "documents"), MinhashSigPerms).orderBy("doc_id")
 
   /** Compact simhash witness: 16-bit signature from the portable hash
     * (per-token hash → ±1 vote per bit → sign → bit pack), mirrored

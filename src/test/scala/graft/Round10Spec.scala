@@ -10,7 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-bucket Sort on day 3. These tests pin the full lifecycle:
   * multi-file buckets DO cost a store-side Sort, compaction restores the
   * one-file-per-bucket layout, and the post-compaction probe is again
-  * Exchange-free AND Sort-free on the store side. */
+  * Exchange-free AND Sort-free on the store side.
+  *
+  * Also pins the per-document native text kernels against the exploded
+  * groupBy forms they replaced: winnowing here, and the MinHash signature
+  * ([[graft.functions.MinhashSignature]]) behind every near-dup pipeline. */
 class Round10Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
@@ -182,5 +186,95 @@ class Round10Spec extends AnyFunSuite {
         case s: org.apache.spark.sql.execution.SortExec => s }.nonEmpty,
         "multi-file buckets must cost a store-side Sort — else compaction would be pointless")
     }
+  }
+
+  // ---- native minhash signatures ----
+
+  /** The retired composition, verbatim: one row per shingle, the portable
+    * hash folded to 30 bits, then a `numHashes`-column `min` aggregate
+    * keyed by doc_id. */
+  private def explodedSignatures(docs: org.apache.spark.sql.DataFrame, numHashes: Int) = {
+    val h30 = docs
+      .select(col("doc_id"), explode(ops.Dedup.shingles(col("text"))).as("sh"))
+      .select(col("doc_id"), (ops.Dedup.portableHash(col("sh")) % lit(1073741824L)).as("h30"))
+    val mins = (0 until numHashes).map(k => min(pmod(
+      col("h30") * lit(ops.Dedup.permA(k)) + lit(ops.Dedup.permB(k)),
+      lit(2147483647L))).as(s"h$k"))
+    h30.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  }
+
+  private def sigMap(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] =
+    df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+
+  private lazy val adversarialDocs = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    (Seq(
+      1000001L -> null,                                // null text: [null] shingles
+      1000002L -> "",                                  // empty text: one "" shingle
+      1000003L -> "one",                               // < 3 tokens: whole-text fallback
+      1000004L -> "one two",
+      1000005L -> "a b c",                             // exactly one shingle
+      1000006L -> Seq.fill(40)("dup").mkString(" "),   // one shingle repeated 38 times
+      1000007L -> "naïve café 日本語 テキスト 🙂 ✓ ok",  // multibyte UTF-8
+      1000008L -> "  a  b  c  ",                       // double spaces: empty tokens
+      1000009L -> Seq.fill(300)(s"t${rnd.nextInt(1000)}").mkString(" "),
+    ) ++ (1000010L to 1000040L).map(i =>
+      i -> Seq.fill(1 + rnd.nextInt(80))(s"x${rnd.nextInt(30)}").mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  test("minhash signatures: native kernel equals the exploded groupBy reference (adversarial + sf0.001)") {
+    val docs = Tables(spark, sf, "documents").select("doc_id", "text").unionByName(adversarialDocs)
+    val got = sigMap(ops.Dedup.minhashSignatures(docs))
+    val ref = sigMap(explodedSignatures(docs, ops.Dedup.NumHashes))
+    assert(got.keySet == ref.keySet)
+    for ((id, sig) <- got) assert(sig == ref(id), s"signature divergence at doc $id")
+    assert(got(1000001L) == Seq.fill(ops.Dedup.NumHashes)(null),
+      "a null document yields NumHashes nulls, as min over its one null row did")
+    assert(got(1000006L).distinct.size > 1, "repeated shingles still rank under 64 permutations")
+  }
+
+  test("minhash witness q_minhash_sig: the 16-wide kernel equals the exploded reference, ordered") {
+    val got = ops.Dedup.minhashSig(spark, sf).collect().map(_.toSeq).toSeq
+    val ref = explodedSignatures(Tables(spark, sf, "documents"), ops.Dedup.MinhashSigPerms)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    assert(got.nonEmpty && got == ref)
+  }
+
+  test("minhash signatures: CODEGEN_ONLY and NO_CODEGEN agree with codegen fallback forbidden") {
+    val docs = Tables(spark, sf, "documents").select("doc_id", "text").unionByName(adversarialDocs)
+    def run(confs: (String, String)*): Map[Long, Seq[Any]] = {
+      val all = confs :+ ("spark.sql.codegen.fallback" -> "false")
+      val saved = all.map { case (k, _) => k -> spark.conf.getOption(k) }
+      all.foreach { case (k, v) => spark.conf.set(k, v) }
+      try sigMap(ops.Dedup.minhashSignatures(docs))
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val compiled = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.wholeStage" -> "true")
+    val interpreted = run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(compiled.nonEmpty && compiled == interpreted)
+  }
+
+  test("minhash signatures plan: a per-row map — no exchange, no explode, one kernel call per row") {
+    val saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = ops.Dedup.minhashSignatures(Tables(spark, sf, "documents"))
+        .queryExecution.executedPlan
+      assert(plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }.isEmpty,
+        s"signature stage must not shuffle:\n$plan")
+      assert(plan.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }.isEmpty,
+        "signature stage must not explode shingles into rows")
+      val kernels = plan.flatMap(_.expressions.flatMap(_.collect {
+        case m: graft.functions.MinhashSignature => m }))
+      assert(kernels.size == 1, s"the kernel must run once per document, not per column:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
   }
 }

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main against the compiled classes + Spark jars without sbt
 # (keeps the sbt project lock free during long tmux runs).
-cd /root/repo
+cd "$(dirname "$0")/.."
 # Fixed-size heap (Xms=Xmx): with a growable heap the probe JVMs spent up
 # to 93% of wall-clock in the KERNEL mid-measurement (vmstat `sy`, zero
 # steal) — G1 uncommits memory after each between-runs GC, and the next
@@ -10,13 +10,15 @@ cd /root/repo
 # cycle; pages still fault in lazily (NO AlwaysPreTouch — zeroing tens of
 # GB per short-lived JVM forces the OS to reclaim that much page cache
 # synchronously at every startup, which measured WORSE than the churn).
-# Default was 96g before r10; memory-heavy mains (large ScaleUp
-# generations) should set GRAFT_HEAP=96g explicitly.
+# Default size: half of MemTotal in whole GiB, clamped to 2..8 g — the
+# rule the Tier-1 test command and perfbench use. GRAFT_HEAP overrides it
+# (memory-heavy mains, e.g. large ScaleUp generations, on a big box).
 # UTC is pinned here because this script bypasses build.sbt's
 # -Dspark.sql.session.timeZone=UTC: the NTZ->Timestamp cast in Tables
 # goes through the session timezone, and a non-UTC host would silently
 # shift events instants relative to the NANOS-long path.
-exec java -Xms${GRAFT_HEAP:-32g} -Xmx${GRAFT_HEAP:-32g} \
+heap="${GRAFT_HEAP:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+exec java -Xms"$heap" -Xmx"$heap" \
   -Duser.timezone=UTC -Dspark.sql.session.timeZone=UTC \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
